@@ -8,29 +8,40 @@ HTTP_REQUEST stream (1-min fixed windows for the rate family, session
 windows for the abuse family); alert legs are flattened into one
 stream and formatted.
 
-Spark shape: one events DataFrame -> N heuristic DataFrames ->
-`unionByName` -> `to_alerts` projections. Each leg is a pure function
-of the shared input, so Spark reuses the scan (or an explicit
-`.persist()` caches the parsed stream once for all legs). The toggle
-config is the dataclass below — the HTTPRequestMultiMode JSON maps
-onto it 1:1.
+Spark shape. The fixed-window legs (hard_limit, error_rate,
+ua_blocklist) share one `groupBy(window, key)` aggregate whose columns
+serve every enabled leg: `count(1)`, a count of 4xx statuses, and the
+blocklist-hit count with its smallest matching agent. One projection
+builds an array holding one alert struct per leg whose condition fired;
+`explode` turns it into alert rows. threshold_analysis (a stats join)
+and session_limit_analysis (session windows) stay legs of their own,
+flattened with `unionByName`.
+
+Why not a union of the standalone operators: every leg of a union
+plans its own scan of the input, so a streaming query reads and parses
+each micro-batch once per leg, and each leg's aggregate keeps its own
+state store. One aggregate reads the source once and commits one state
+store per trigger. The standalone operators in `operators/heuristics.py`
+stay as they are; the catalog queries and their oracles use them, and
+the pipeline's tests check the fused form against their union.
+
+The toggle config is the dataclass below — the HTTPRequestMultiMode
+JSON maps onto it 1:1.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..alert.model import to_alerts
-from ..operators import (
-    error_rate_analysis,
-    hard_limit_analysis,
-    session_limit_analysis,
-    threshold_analysis,
-    ua_blocklist_analysis,
-)
+from ..operators import session_limit_analysis, threshold_analysis
+
+CATEGORY = "httprequest"
+SEVERITY = "warn"
 
 
 @dataclass
@@ -54,6 +65,79 @@ class HTTPRequestToggles:
     window: str = "1 minute"
 
 
+def _meta(key: str, cols: list[str], monitored_resource: str) -> Column:
+    """The alert metadata map: the key, the leg's figures, then the
+    monitored resource — the order `to_alerts` + `map_concat` give."""
+    pairs = [(c, F.col(c).cast("string")) for c in [key, *cols]]
+    pairs.append(("monitored_resource", F.lit(monitored_resource).cast("string")))
+    return F.create_map(*[x for name, v in pairs for x in (F.lit(name), v)])
+
+
+def _fixed_window_alerts(
+    events: DataFrame,
+    toggles: HTTPRequestToggles,
+    key: str,
+    ts: str,
+    status_col: str,
+    ua_col: str,
+    monitored_resource: str,
+) -> DataFrame | None:
+    """hard_limit, error_rate and ua_blocklist alerts from ONE
+    `groupBy(window, key)`; None when none of them is enabled.
+
+    Each enabled leg adds its aggregate columns and one
+    `when(fired, struct(subcategory, summary, metadata))` element; the
+    columns carry the metadata names of the standalone operators."""
+    aggs: list[Column] = []
+    fired: list[Column] = []
+
+    def leg(subcategory: str, cond: Column, prefix: str, cols: list[str]):
+        fired.append(F.when(cond, F.struct(
+            F.lit(subcategory).alias("subcategory"),
+            F.concat(F.lit(prefix), F.col(key)).alias("summary"),
+            _meta(key, cols, monitored_resource).alias("metadata"),
+        )))
+
+    if toggles.enable_hard_limit_analysis:
+        aggs.append(F.count(F.lit(1)).alias("count"))
+        leg("hard_limit", F.col("count") > F.lit(int(toggles.hard_limit_count)),
+            "hard limit from ", ["count"])
+    if toggles.enable_error_rate_analysis:
+        is_error = F.col(status_col).between(400, 499)
+        aggs.append(F.count(F.when(is_error, 1)).alias("error_count"))
+        leg("error_rate",
+            F.col("error_count") > F.lit(int(toggles.max_client_errors)),
+            "error rate from ", ["error_count"])
+    if toggles.enable_ua_blocklist_analysis and toggles.ua_blocklist:
+        ua_hit = reduce(lambda a, b: a | b,
+                        [F.col(ua_col).rlike(p) for p in toggles.ua_blocklist])
+        aggs += [F.count(F.when(ua_hit, 1)).alias("n_matched"),
+                 F.min(F.when(ua_hit, F.col(ua_col))).alias("sample_user_agent")]
+        leg("ua_blocklist", F.col("n_matched") > 0, "blocklisted agent from ",
+            ["n_matched", "sample_user_agent"])
+    if not aggs:
+        return None
+
+    return (
+        events.groupBy(F.window(ts, toggles.window).alias("window"), F.col(key))
+        .agg(*aggs)
+        .select(
+            F.col("window.start").alias("timestamp"),
+            F.explode(F.filter(F.array(*fired), lambda a: a.isNotNull())).alias("a"),
+        )
+        .select(
+            F.expr("uuid()").alias("alert_id"),
+            "timestamp",
+            F.lit(CATEGORY).alias("category"),
+            "a.subcategory",
+            F.lit(SEVERITY).alias("severity"),
+            "a.summary",
+            F.lit(None).cast("string").alias("notify_merge"),
+            "a.metadata",
+        )
+    )
+
+
 def assemble_httprequest(
     events: DataFrame,
     toggles: HTTPRequestToggles,
@@ -68,15 +152,15 @@ def assemble_httprequest(
     GlobalTriggers flatten)."""
     legs: list[DataFrame] = []
 
-    def add(df: DataFrame, subcategory: str, summary):
+    def add(df: DataFrame, subcategory: str, summary: Column, ts_col: str):
         legs.append(
             to_alerts(
                 df,
-                category="httprequest",
+                category=CATEGORY,
                 subcategory=subcategory,
-                severity="warn",
+                severity=SEVERITY,
                 summary=summary,
-                timestamp_col=df.columns[0],
+                timestamp_col=ts_col,
             ).withColumn(
                 "metadata",
                 F.map_concat(
@@ -95,34 +179,18 @@ def assemble_httprequest(
             threshold_modifier=toggles.threshold_modifier,
         )
         add(hits, "threshold_analysis",
-            F.concat(F.lit("threshold exceeded for "), F.col(key)))
-    if toggles.enable_hard_limit_analysis:
-        hits = hard_limit_analysis(
-            events, key=key, ts=ts, duration=toggles.window,
-            max_count=toggles.hard_limit_count,
-        )
-        add(hits, "hard_limit", F.concat(F.lit("hard limit from "), F.col(key)))
-    if toggles.enable_error_rate_analysis:
-        hits = error_rate_analysis(
-            events, key=key,
-            error_predicate=F.col(status_col).between(400, 499),
-            ts=ts, duration=toggles.window, max_errors=toggles.max_client_errors,
-        )
-        add(hits, "error_rate", F.concat(F.lit("error rate from "), F.col(key)))
+            F.concat(F.lit("threshold exceeded for "), F.col(key)), "window_start")
+    fixed = _fixed_window_alerts(events, toggles, key, ts, status_col, ua_col,
+                                 monitored_resource)
+    if fixed is not None:
+        legs.append(fixed)
     if toggles.enable_session_limit_analysis:
         hits = session_limit_analysis(
             events, key=key, ts=ts, gap=toggles.session_gap,
             monitor=toggles.session_limit_count,
         )
         add(hits, "session_limit",
-            F.concat(F.lit("session volume from "), F.col(key)))
-    if toggles.enable_ua_blocklist_analysis and toggles.ua_blocklist:
-        hits = ua_blocklist_analysis(
-            events, key=key, ua_col=ua_col, patterns=toggles.ua_blocklist,
-            ts=ts, duration=toggles.window,
-        )
-        add(hits, "ua_blocklist",
-            F.concat(F.lit("blocklisted agent from "), F.col(key)))
+            F.concat(F.lit("session volume from "), F.col(key)), "first_ts")
 
     if not legs:
         raise ValueError("no heuristics enabled")
