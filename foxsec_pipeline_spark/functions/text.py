@@ -32,10 +32,6 @@ def tokens(text: Column, pattern: str = r"\s+") -> Column:
     return F.split(F.trim(text), pattern)
 
 
-def token_count(text: Column) -> Column:
-    return F.size(tokens(text))
-
-
 def word_shingles(text: Column, n: int = 3) -> Column:
     """Distinct word n-gram shingles -> array<string>.
 
@@ -70,24 +66,6 @@ def md5_bucket(s: Column, prefix_hex_chars: int = 15) -> Column:
     return F.conv(F.substring(F.md5(s), 1, prefix_hex_chars), 16, 10).cast("long")
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 8) -> Column:
-    """MinHash signature as array<string>: element i is
-    min(md5(i || '|' || shingle)). Lexicographic min over a uniform
-    hash is a valid min-wise permutation; md5 keeps it portable so
-    oracle SQL can reproduce it exactly.
-    """
-    def _perm_min(i: int):
-        # closure factory, NOT a default-arg lambda: `lambda s, i=i`
-        # has visible arity 2, which F.transform would treat as an
-        # (element, index) lambda
-        def h(s):
-            return F.md5(F.concat(F.lit(f"{i}|"), s))
-
-        return F.array_min(F.transform(shingles, h))
-
-    return F.array(*[_perm_min(i) for i in range(num_hashes)])
-
-
 def parse_syslog_ts(col: Column, year: Column | int | None = None) -> Column:
     """Syslog 'MMM dd HH:mm:ss' timestamp parse with year correction
     (`parser/Parser.java:106-153`): syslog lines carry no year, so the
@@ -113,28 +91,6 @@ def parse_syslog_ts(col: Column, year: Column | int | None = None) -> Column:
 MINHASH_P = 2_147_483_647
 MINHASH_A = [(2 * i + 1) * 1_000_003 % MINHASH_P for i in range(64)]
 MINHASH_B = [(i * i + 7) * 999_983 % MINHASH_P for i in range(64)]
-
-
-def minhash_signature_universal(shingle_hashes: Column, num_hashes: int = 8) -> Column:
-    """MinHash signature as array<long> over pre-hashed shingles
-    (int64 in [0, P)): element i = min over shingles of
-    (A_i * h + B_i) mod P.
-
-    One md5 per shingle total (the caller computes `md5_bucket(s) % P`
-    once into a column), then num_hashes multiply-mods per shingle —
-    ~8× fewer digest computations than per-permutation md5 minima,
-    same min-wise-permutation guarantee.
-    """
-
-    def _perm_min(i: int):
-        a, b = MINHASH_A[i], MINHASH_B[i]
-
-        def h(x):
-            return (F.lit(a) * x + F.lit(b)) % F.lit(MINHASH_P)
-
-        return F.array_min(F.transform(shingle_hashes, h))
-
-    return F.array(*[_perm_min(i) for i in range(num_hashes)])
 
 
 def normalize_email_plus(email: Column) -> Column:

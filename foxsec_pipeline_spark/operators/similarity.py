@@ -95,19 +95,6 @@ def cosine_topk(
     )
 
 
-def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """Random-hyperplane LSH bucket id: sign bit per plane, packed.
-
-    `planes` is a small python-side list (broadcast as literals into
-    the expression). Bucket = Σ 2^i * (dot(vec, plane_i) > 0).
-    """
-    bucket = F.lit(0)
-    for i, plane in enumerate(planes):
-        arr = F.array(*[F.lit(float(v)) for v in plane])
-        bucket = bucket + F.when(dot(vec, arr) > 0, F.lit(2**i)).otherwise(F.lit(0))
-    return bucket
-
-
 # fixed-point scale for the relational bucket path: embeddings are
 # float32 in (-1, 1); x -> floor(x * 2^20) is exact in double (the
 # scale is a power of two) and makes the per-plane dot an INTEGER sum
@@ -163,11 +150,10 @@ def lsh_buckets_relational(
     referenced exactly once by the pack; (2) Generate re-evaluation —
     the posexplode consumes a MATERIALIZED pack-array column
     (re-evaluating an attribute reference per output row is free);
-    (3) py4j cost — the dot exprs are parsed SQL strings. Null/empty
-    vectors are filtered up front (the posexplode form emitted no
-    rows for them). Measured at 4 planes: dedup_embedding_cosine
-    1.32 -> 1.09 s, ann_cosine_lsh ~flat-to-better, semdedup/
-    embedding_cluster_summary win big with the joins also removed.
+    (3) py4j cost — the dot exprs are parsed SQL strings. Measured at
+    4 planes: dedup_embedding_cosine 1.32 -> 1.09 s, ann_cosine_lsh
+    ~flat-to-better, semdedup/embedding_cluster_summary win big with
+    the joins also removed.
 
     RELATIONAL form (above the cutoff): posexplode + one codegen
     integer agg per plane + sign-pack. HOFs evaluate INTERPRETED, and
@@ -175,14 +161,18 @@ def lsh_buckets_relational(
     the saved aggregate exchange — interleaved A/B on
     ann_cosine_lsh_multiprobe: map form 1.75 s vs relational 1.42 s
     min, so the wide-table path keeps codegen.
+
+    Both forms share one input contract: null and empty vectors, and
+    vectors with any NULL component, get no bucket rows. (Unfiltered,
+    a NULL component would zero every plane dot of the map form but
+    be skipped by the relational form's sum.)
     """
+    valid = spread(df).where(
+        f"size({vec_col}) >= 1 AND forall({vec_col}, __x -> __x IS NOT NULL)"
+    )
     if sum(len(t) for t in tables) <= _LSH_MAP_FORM_MAX_PLANES:
-        base = (
-            spread(df)
-            .where(F.size(F.col(vec_col)) >= 1)
-            .selectExpr(
-                id_col, vec_col, f"{_fixed_point_plain_hof_sql(vec_col)} AS __xs"
-            )
+        base = valid.selectExpr(
+            id_col, vec_col, f"{_fixed_point_plain_hof_sql(vec_col)} AS __xs"
         )
         dot_exprs = []
         for t, table in enumerate(tables):
@@ -206,7 +196,7 @@ def lsh_buckets_relational(
             F.col(vec_col),
             F.posexplode("__pk").alias("__tbl", "__bkt"),
         )
-    ex = spread(df).select(
+    ex = valid.select(
         F.col(id_col), F.col(vec_col), F.posexplode(vec_col).alias("__j", "__x")
     )
     scaled = ex.select(
@@ -467,65 +457,6 @@ def _int_exploded(df: DataFrame, id_col: str, vec_col: str, out_id: str) -> Data
     )
 
 
-def ivf_cells(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(__vid, cid, __d, __rn): every vector scored against every
-    centroid by INTEGER fixed-point inner product, ranked per vector
-    (rank 1 = the vector's IVF cell).
-
-    The score is a MIPS (max-inner-product) coarse quantizer rather
-    than full cosine: skipping the centroid-norm division keeps the
-    whole assignment in int64 — exactly reproducible under any
-    summation order and by the DuckDB oracle's fold, with centroid-id
-    tie-break making ranks total. For ~unit-norm embeddings the cells
-    approximate cosine Voronoi cells; products are bounded by
-    64 * 2^40 < 2^47, no int64 overflow.
-
-    Shape for 100 TB: centroids are tiny and BROADCAST; the corpus is
-    posexploded map-side (|corpus| x dim rows), partial-agged back to
-    ~|corpus| x K rows before the one shuffle on (id, cid), then a
-    window argmax per id. One pass over the corpus, no corpus
-    self-join.
-    """
-    dots = _ivf_dots(vectors, centroids, id_col, vec_col)
-    w = Window.partitionBy("__vid").orderBy(F.col("__d").desc(), F.col("cid").asc())
-    return dots.withColumn("__rn", F.row_number().over(w))
-
-
-def _ivf_dots(vectors, centroids, id_col, vec_col):
-    ex = _int_exploded(vectors, id_col, vec_col, "__vid")
-    ce = _int_exploded(centroids, id_col, vec_col, "cid").withColumnRenamed(
-        "__xs", "__cs"
-    )
-    return (
-        ex.join(F.broadcast(ce), "__j")
-        .groupBy("__vid", "cid")
-        .agg(F.sum(F.col("__xs") * F.col("__cs")).alias("__d"))
-    )
-
-
-def ivf_assign(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, cell): each vector's IVF cell — argmax integer MIPS dot,
-    ties to the lowest centroid id, via max_by hash-agg (no rank
-    window). The assignment half of `cosine_topk_ivf`, exposed for
-    clustering / cluster-summary consumers."""
-    dots = _ivf_dots(corpus, centroids, id_col, vec_col)
-    return (
-        dots.groupBy("__vid")
-        .agg(F.expr("max_by(cid, struct(__d, -cid))").alias("cell"))
-        .select(F.col("__vid").alias(id_col), "cell")
-    )
-
-
 def int8_quantize(
     df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> DataFrame:
@@ -770,112 +701,38 @@ def _pq_train_numpy(corpus, seed_ids, n_sub, dim, iters, id_col, vec_col):
     return {k: v for k, v in sorted(out.items())}
 
 
-def ivf_codebook_df(
-    spark,
-    codebook: dict[int, list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Materialize a trained codebook as the (id, vector) frame the
-    IVF operators consume (components are exact 2^-20 multiples, so
-    the fixed-point re-scale inside `_int_exploded` is lossless)."""
-    return spark.createDataFrame(
-        [(cid, comps) for cid, comps in sorted(codebook.items())],
-        f"{id_col} long, {vec_col} array<double>",
-    )
-
-
 def _ivf_candidates(
     queries: DataFrame,
     corpus: DataFrame,
-    centroid_ids: list[int] | None,
+    codebook: dict[int, list[float]],
     id_col: str,
     vec_col: str,
     nprobe: int,
-    queries_in_corpus: bool,
-    centroids: DataFrame | None,
-    codebook: dict[int, list[float]] | None = None,
 ) -> DataFrame:
     """(query_id, neighbor_id) candidate pairs from IVF cell probing —
     the shared head of `cosine_topk_ivf` and `cosine_range_ivf`.
 
-    When the caller holds the trained codebook DICT (`codebook`), both
-    assignment passes take the r13 literal map form: corpus cell =
+    The codebook enters as literal arrays: corpus cell =
     `_ivf_cell_sql` argmax, query probe cells = `_ivf_probe_sql`
-    top-nprobe — zero joins/aggregates/exchanges before the cell-id
-    equi-join, where the relational form posexploded the corpus
-    against a broadcast centroid frame and paid an aggregate exchange
-    (guide §2.3/§2.4). Cell ids and probe sets are bit-identical
-    (integer dots, identical tie order); the `queries_in_corpus` dots
-    reuse becomes moot because query scoring is map-side over |Q|
-    rows."""
-    if codebook is not None:
-        corpus_cells = ivf_assign_literal(
-            corpus, codebook, id_col=id_col, vec_col=vec_col
-        ).select(
-            F.col(id_col).alias("neighbor_id"), F.col("cell").alias("__cell")
-        )
-        q_wide = (
-            spread(queries)
-            .where(F.size(F.col(vec_col)) >= 1)
-            .selectExpr(
-                id_col, f"{_fixed_point_hof_sql(vec_col)} AS __xs"
-            )
-            .selectExpr(
-                id_col, f"{_ivf_probe_sql(codebook, nprobe)} AS __cells"
-            )
-        )
-        query_cells = q_wide.select(
-            F.col(id_col).alias("query_id"),
-            F.explode("__cells").alias("__cell"),
-        )
-        return (
-            corpus_cells.join(F.broadcast(query_cells), "__cell")
-            .where(F.col("query_id") != F.col("neighbor_id"))
-            .select("query_id", "neighbor_id")
-        )
-    if centroids is not None:
-        cents = centroids
-    elif centroid_ids is not None:
-        cents = corpus.where(F.col(id_col).isin([int(i) for i in centroid_ids]))
-    else:
-        raise ValueError("pass centroids or centroid_ids")
-    # corpus assignment needs only the ARGMAX cell, so a max_by
-    # hash-agg replaces the rank window — no sort of the |corpus| x K
-    # score rows (the window's dominant cost at scale). struct(__d,
-    # -cid) max = highest dot, ties to the LOWEST centroid id, exactly
-    # the oracle's ORDER BY d DESC, cid ASC at rn = 1.
-    dots = _ivf_dots(corpus, cents, id_col, vec_col)
-    corpus_cells = (
-        dots.groupBy("__vid")
-        .agg(F.expr("max_by(cid, struct(__d, -cid))").alias("__cell"))
-        .select(F.col("__vid").alias("neighbor_id"), "__cell")
+    top-nprobe, so nothing is joined, aggregated or exchanged before
+    the cell-id equi-join. Each corpus vector is in exactly one cell
+    and probe cells are distinct per query, so a (query, neighbor)
+    pair meets at most once and needs no dedup. The relational form
+    (posexplode against a broadcast centroid frame, max_by agg, rank
+    window) lives on in tests/similarity_reference.py as the oracle
+    these pairs are checked against."""
+    corpus_cells = ivf_assign_literal(
+        corpus, codebook, id_col=id_col, vec_col=vec_col
+    ).select(F.col(id_col).alias("neighbor_id"), F.col("cell").alias("__cell"))
+    q_wide = (
+        spread(queries)
+        .where(F.size(F.col(vec_col)) >= 1)
+        .selectExpr(id_col, f"{_fixed_point_hof_sql(vec_col)} AS __xs")
+        .selectExpr(id_col, f"{_ivf_probe_sql(codebook, nprobe)} AS __cells")
     )
-    if queries_in_corpus:
-        # queries ⊆ corpus (dedup/self-search): the corpus assignment
-        # pass already scored every query vector — probe cells come
-        # from the SAME dots frame via a broadcast id semi-join + a
-        # window over only the query rows, halving the assignment work
-        q_dots = dots.join(
-            F.broadcast(queries.select(F.col(id_col).alias("__vid"))), "__vid"
-        )
-        w = Window.partitionBy("__vid").orderBy(
-            F.col("__d").desc(), F.col("cid").asc()
-        )
-        query_cells = (
-            q_dots.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") <= F.lit(int(nprobe)))
-            .select(F.col("__vid").alias("query_id"), F.col("cid").alias("__cell"))
-        )
-    else:
-        query_cells = (
-            ivf_cells(queries, cents, id_col, vec_col)
-            .where(F.col("__rn") <= F.lit(int(nprobe)))
-            .select(F.col("__vid").alias("query_id"), F.col("cid").alias("__cell"))
-        )
-    # each corpus vector is in exactly one cell and probe cells are
-    # distinct per query, so a (query, neighbor) pair meets at most
-    # once — no dedup needed before scoring
+    query_cells = q_wide.select(
+        F.col(id_col).alias("query_id"), F.explode("__cells").alias("__cell")
+    )
     return (
         corpus_cells.join(F.broadcast(query_cells), "__cell")
         .where(F.col("query_id") != F.col("neighbor_id"))
@@ -886,14 +743,11 @@ def _ivf_candidates(
 def cosine_topk_ivf(
     queries: DataFrame,
     corpus: DataFrame,
-    centroid_ids: list[int] | None = None,
+    codebook: dict[int, list[float]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
     nprobe: int = 2,
-    queries_in_corpus: bool = False,
-    centroids: DataFrame | None = None,
-    codebook: dict[int, list[float]] | None = None,
 ) -> DataFrame:
     """Approximate top-k via IVF (inverted-file) bucketing: each corpus
     vector lands in exactly ONE cell (nearest centroid); each query
@@ -903,15 +757,11 @@ def cosine_topk_ivf(
     recall is tuned by nprobe (measured against the exact baseline in
     tests/test_similarity_recall.py).
 
-    Centroids come either from a trained codebook (`centroids`, see
-    `ivf_train_codebook`) or from the corpus by id (`centroid_ids`) —
-    the deterministic untrained fallback; the operator only assumes
-    the centroid set is small enough to broadcast, which both are.
+    `codebook` is {centroid id: vector}, small enough to inline as
+    literals: a trained one from `ivf_train_codebook`, or untrained
+    corpus vectors keyed by their own ids.
     """
-    cand = _ivf_candidates(
-        queries, corpus, centroid_ids, id_col, vec_col, nprobe,
-        queries_in_corpus, centroids, codebook,
-    )
+    cand = _ivf_candidates(queries, corpus, codebook, id_col, vec_col, nprobe)
     return _score_candidates(cand, queries, corpus, id_col, vec_col, k)
 
 
@@ -919,13 +769,10 @@ def cosine_range_ivf(
     queries: DataFrame,
     corpus: DataFrame,
     radius: float,
-    centroid_ids: list[int] | None = None,
+    codebook: dict[int, list[float]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     nprobe: int = 2,
-    queries_in_corpus: bool = False,
-    centroids: DataFrame | None = None,
-    codebook: dict[int, list[float]] | None = None,
 ) -> DataFrame:
     """Approximate cosine RANGE (radius) search via IVF cell probing:
     all probed candidates with cosine >= `radius`, the sub-linear
@@ -935,10 +782,7 @@ def cosine_range_ivf(
     Output (query_id, neighbor_id, cosine), unranked: a radius query
     has no k, so no per-query window is needed — the filter is
     map-side over the scored candidates."""
-    cand = _ivf_candidates(
-        queries, corpus, centroid_ids, id_col, vec_col, nprobe,
-        queries_in_corpus, centroids, codebook,
-    )
+    cand = _ivf_candidates(queries, corpus, codebook, id_col, vec_col, nprobe)
     qv = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("__qv"),
@@ -1140,9 +984,12 @@ def pq_encode_literal(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """(vec_id, __m, code) — same contract as :func:`pq_encode`, but
-    the trained codebook enters as LITERAL arrays in one scalar
-    projection instead of an exploded broadcast-join: per subspace the
+    """(vec_id, __m, code): each vector's nearest codeword per
+    subspace (squared-L2 argmin, ties to the lowest code id) — the
+    compressed corpus, M small ints per vector. The trained codebook
+    enters as LITERAL arrays in one scalar projection instead of an
+    exploded broadcast-join (the relational encode kept as the oracle
+    in tests/similarity_reference.py): per subspace the
     argmin over K codes is `array_min(transform(<literal codewords>,
     cw -> struct(Σ(xs-cs)², cid)))` (lexicographic struct order ==
     min_by(cid, struct(d, cid)) ties-to-lowest), and the code row
@@ -1196,12 +1043,13 @@ def pq_encode_literal(
 
 def _ivf_cell_sql(codebook: dict[int, list[float]]) -> str:
     """SQL expr for the argmax-MIPS IVF cell id over a materialized
-    `__xs` fixed-point array column — the literal-codebook twin of
-    `ivf_assign`'s max_by(cid, struct(__d, -cid)): array_max over
-    (d, -cid) structs picks max dot, ties to the LOWEST cid. Codebook
-    components are exact 2^-20 multiples (ivf_train_codebook), so the
-    floor re-scale recovers the trained integers losslessly — the
-    same conversion `_int_exploded` applies to the centroid frame."""
+    `__xs` fixed-point array column — the literal-codebook twin of the
+    reference assignment's max_by(cid, struct(__d, -cid)) in
+    tests/similarity_reference.py: array_max over (d, -cid) structs
+    picks max dot, ties to the LOWEST cid. Codebook components are
+    exact 2^-20 multiples (ivf_train_codebook), so the floor re-scale
+    recovers the trained integers losslessly — the same conversion
+    `_int_exploded` applies to a vector."""
     import math
 
     structs = []
@@ -1268,16 +1116,21 @@ def ivf_assign_literal(
     vec_col: str = "embedding",
     carry_cols: tuple = (),
 ) -> DataFrame:
-    """(id, [carry_cols...,] cell) — same contract and identical cell
-    ids as :func:`ivf_assign` over `ivf_codebook_df(codebook)`, but the
-    trained codebook enters as LITERAL arrays in one map projection
-    instead of the posexplode + broadcast-join + agg/window relational
-    form (r13, guide §2.3/§2.4 — the pq_encode_literal pattern): zero
-    exchanges, zero joins, |corpus| rows in flight. ``carry_cols``
-    projects extra input columns through the same pass so consumers
-    don't join the assignment back to the corpus on id. Null/empty
-    vectors are dropped (the relational form's posexplode emitted no
-    rows for them); components pass the `_int_exploded` range guard."""
+    """(id, [carry_cols...,] cell): each vector's IVF cell — argmax
+    integer MIPS dot, ties to the lowest centroid id. MIPS rather than
+    cosine: skipping the centroid-norm division keeps the assignment
+    in exact int64, reproducible by the DuckDB oracle's fold; for
+    ~unit-norm embeddings the cells approximate cosine Voronoi cells.
+    The codebook
+    enters as LITERAL arrays in one map projection (the
+    pq_encode_literal pattern): zero exchanges, zero joins, |corpus|
+    rows in flight; tests/similarity_reference.py keeps the relational
+    posexplode + broadcast-join + agg form as the oracle for these
+    cell ids. ``carry_cols`` projects extra input columns through the
+    same pass so consumers don't join the assignment back to the
+    corpus on id. Null/empty vectors are dropped (the reference's
+    posexplode emits no rows for them); components pass the
+    `_int_exploded` range guard."""
     proj = (
         spread(corpus)
         .where(F.size(F.col(vec_col)) >= 1)
@@ -1287,35 +1140,6 @@ def ivf_assign_literal(
     )
     return proj.selectExpr(
         id_col, *carry_cols, f"{_ivf_cell_sql(codebook)} AS cell"
-    )
-
-
-def pq_encode(
-    corpus: DataFrame,
-    codebook: DataFrame,
-    sub_dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(vec_id, __m, code): each vector's nearest codeword per subspace
-    (squared-L2 argmin, ties to the lowest code id). One pass over the
-    corpus: posexplode map-side, broadcast-join the M*K*sub_dim
-    codebook, partial-agg back to |corpus| x M x K score rows before
-    the one shuffle, min_by hash-agg (no rank window). The output IS
-    the compressed corpus — M small ints per vector."""
-    ex = _int_exploded_sub(corpus, id_col, vec_col, "__vid", sub_dim)
-    return (
-        ex.join(F.broadcast(codebook), ["__m", "__jj"])
-        .groupBy("__vid", "__m", "cid")
-        .agg(
-            F.sum(
-                (F.col("__xs") - F.col("__cs"))
-                * (F.col("__xs") - F.col("__cs"))
-            ).alias("__d")
-        )
-        .groupBy("__vid", "__m")
-        .agg(F.expr("min_by(cid, struct(__d, cid))").alias("code"))
-        .select(F.col("__vid").alias(id_col), "__m", "code")
     )
 
 
@@ -1361,12 +1185,9 @@ def cosine_topk_pq(
             id_col=id_col, vec_col=vec_col,
         )
     cb = pq_codebook_df(corpus.sparkSession, codebooks)
-    # r13: the CORPUS-scale encode takes the literal-codebook path
-    # (one whole-stage-codegen projection, zero exchanges) instead of
-    # the posexplode + broadcast-join + two-agg relational form; the
-    # query-side LUT below stays relational — it is |Q|-sized and its
-    # explode/join cost is noise. Same integer math, same argmin
-    # tie-break (see pq_encode_literal), so codes are bit-identical.
+    # the CORPUS-scale encode is one literal-codebook projection (zero
+    # exchanges); the query-side LUT below stays relational — it is
+    # |Q|-sized and its explode/join cost is noise
     codes = pq_encode_literal(
         corpus, codebooks, n_sub, sub_dim, id_col=id_col, vec_col=vec_col
     )

@@ -749,23 +749,24 @@ def q_winnowing_plagiarism_pairs(spark, sf_dir):
     docn = d.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_fp")
     )
-    # r13 (guide §2.4): pairs are generated INSIDE each fp_hash bucket
-    # by grouping doc ids and exploding ordered combinations — the r12
-    # aliased SELF-JOIN evaluated the whole fingerprint pipeline for
-    # both join sides (Catalyst gives aliased subplans no exchange
-    # reuse), and needed a separate df hash-agg + semi-join for the
-    # cap. Here the df-cap [2, _WINNOW_DF_CAP] folds into the same
-    # grouping aggregate as pair generation (size of the id array),
-    # the same shape as ngram_jaccard_pairs / minhash_lsh_pairs; the
-    # explicit-width repartition spreads the quadratic explode AQE
-    # can't see (byte-blind coalescing).
+    # pairs are generated INSIDE each fp_hash bucket by grouping doc
+    # ids and exploding ordered combinations (an aliased self-join
+    # would evaluate the fingerprint pipeline for both sides). The
+    # df-cap [2, _WINNOW_DF_CAP] is applied by a COUNT per fp_hash
+    # before collect_list builds any id array, so a hot boilerplate
+    # fingerprint shared by millions of docs is dropped without ever
+    # being collected. The explicit-width repartition spreads the
+    # quadratic explode AQE can't see (byte-blind coalescing).
     par = spark.sparkContext.defaultParallelism
-    grouped = (
+    capped = (
         d.groupBy("fp_hash")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .where(F.col("df").between(2, _WINNOW_DF_CAP))
+    )
+    grouped = (
+        d.join(capped, "fp_hash", "left_semi")
+        .groupBy("fp_hash")
         .agg(F.sort_array(F.collect_list("doc_id")).alias("docs"))
-        .where(
-            (F.size("docs") >= 2) & (F.size("docs") <= _WINNOW_DF_CAP)
-        )
     )
     pr = (
         grouped.repartition(par)

@@ -564,15 +564,10 @@ FROM ranked WHERE rank <= 5
 )
 def q_ann_cosine_ivf(spark, sf_dir):
     emb = load_tables(spark, sf_dir, "embeddings")["embeddings"]
+    # the trained codebook dict rides in as literals (map-side corpus
+    # assign + map-side probe cells, see _ivf_candidates)
     cb = _trained_ivf_codebook(spark, sf_dir)
-    # r13: the trained codebook dict rides in as literals (map-side
-    # corpus assign + map-side probe cells — guide §2.3/§2.4, see
-    # _ivf_candidates); centroids kept for the relational fallback's
-    # contract documentation
-    return cosine_topk_ivf(
-        emb.where(F.col("vec_id") < 10), emb, k=5, nprobe=2,
-        queries_in_corpus=True, codebook=cb,
-    )
+    return cosine_topk_ivf(emb.where(F.col("vec_id") < 10), emb, cb, k=5, nprobe=2)
 
 
 # PQ operating point (recall curve measured in

@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Union the driver's CORRECTNESS_r*.json artifacts against the live
-queries() registry and report each query's LATEST driver evidence —
-the staleness bookkeeping the per-round prefix ordering is built on.
+queries() registry and report each query's LATEST driver evidence
+(read by `__spark_entry__.latest_rows`, the same data
+`__spark_entry__.verify_order` computes the driver's order from).
 
 Prints one line per status bucket plus the stale backlog in
 oldest-first order (the order the next round's prefix should re-green
@@ -9,16 +10,13 @@ them), and exits non-zero if any query's LATEST recorded row is red
 or if a registry query has never been driver-checked AND is not in
 the upcoming 50-row prefix.
 
-Usage: python scripts/check_union.py [--repo /root/repo]
+Usage: python scripts/check_union.py [--repo <checkout dir>]
 """
 
 from __future__ import annotations
 
 import argparse
-import glob
-import json
 import os
-import re
 import sys
 
 
@@ -32,20 +30,7 @@ def main() -> None:
     import __spark_entry__ as entry
 
     ordered = list(entry.queries())
-    latest: dict[str, tuple[int, bool]] = {}
-    for path in sorted(glob.glob(os.path.join(args.repo, "CORRECTNESS_r*.json"))):
-        # match on the basename only — a checkout path containing
-        # _r<digits> (e.g. /home/u/repo_r2) must not shadow the
-        # artifact's own round number
-        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", os.path.basename(path))
-        if m is None:
-            continue
-        rnd = int(m.group(1))
-        rows = json.load(open(path))
-        for name, row in rows.items():
-            ok = bool(row.get("rows_match")) and bool(
-                row.get("schema_match")) and bool(row.get("hash_match"))
-            latest[name] = (rnd, ok)
+    latest = entry.latest_rows(args.repo)
 
     prefix = set(ordered[:50])
     red, never, by_round = [], [], {}

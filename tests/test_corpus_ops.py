@@ -732,3 +732,82 @@ def test_vocab_growth_matches_python_recount(spark, reg):
         cum += r.new_units
         assert r.cum_vocab == cum
     assert cum == len(first)
+
+
+def test_winnowing_pairs_hot_fingerprint_capped_by_count(spark, reg, tmp_path):
+    """A fingerprint shared by far more docs than _WINNOW_DF_CAP (here
+    a boilerplate run in 60 injected docs) is dropped by a COUNT per
+    fp_hash before collect_list builds any doc-id array; the pairs
+    still equal the DuckDB oracle."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from foxsec_pipeline_spark.plans.catalog_corpus import (
+        _WINNOW_CTES,
+        _WINNOW_DF_CAP,
+    )
+    from tests.conftest import assert_matches_oracle
+
+    n_hot = 60
+    assert n_hot > 3 * _WINNOW_DF_CAP
+    boiler = " ".join(f"bp{j}" for j in range(12))
+    docs = pq.read_table(f"{SF_DIR}/documents.parquet").to_pylist()
+    next_id = max(d["doc_id"] for d in docs) + 1
+    for i in range(n_hot):
+        # each pair (2k, 2k+1) also shares two separated 14-word runs,
+        # so the injected docs produce pairs next to the dropped key
+        def words(tag):
+            return " ".join(f"{tag}{j}" for j in range(14))
+
+        text = " ".join([
+            words(f"u{i}_"), boiler, words(f"p{i // 2}_"),
+            words(f"v{i}_"), words(f"q{i // 2}_"),
+        ])
+        docs.append({"doc_id": next_id + i, "text": text, "lang": "en",
+                     "source": "s", "n_chars": len(text)})
+    base = str(tmp_path)
+    pq.write_table(pa.Table.from_pylist(docs), f"{base}/documents.parquet")
+
+    spec = reg["winnowing_plagiarism_pairs"]
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{base}/documents.parquet'"
+    )
+    # the injected boilerplate really is a hot fingerprint
+    max_df = con.execute(
+        _WINNOW_CTES + "SELECT max(c) FROM (SELECT count(DISTINCT doc_id) "
+        "AS c FROM fp GROUP BY fp_hash)"
+    ).fetchone()[0]
+    assert max_df >= n_hot
+    df = spec.fn(spark, base)
+    got = {(r.doc_a, r.doc_b) for r in df.collect()}
+    injected = set(range(next_id, next_id + n_hot))
+    assert {(next_id + 2 * k, next_id + 2 * k + 1)
+            for k in range(n_hot // 2)} <= got
+    assert not any(a in injected and b in injected and b != a + 1
+                   for a, b in got)
+    assert_matches_oracle(df, con, spec.oracle, name=spec.name)
+
+    # in the optimized plan, the collect_list aggregate sits above a
+    # count aggregate keyed on fp_hash
+    def aggregates(node):
+        out, stack = [], [node]
+        while stack:
+            n = stack.pop()
+            if n.nodeName() == "Aggregate":
+                out.append(n)
+            kids = n.children()
+            stack.extend(kids.apply(i) for i in range(kids.size()))
+        return out
+
+    plan = df._jdf.queryExecution().optimizedPlan()
+    collects = [a for a in aggregates(plan)
+                if "collect_list" in a.aggregateExpressions().toString()]
+    assert len(collects) == 1, plan.treeString()
+    below = aggregates(collects[0].child())
+    assert any(
+        "fp_hash" in a.groupingExpressions().toString()
+        and "count(1)" in a.aggregateExpressions().toString()
+        for a in below
+    ), collects[0].treeString()

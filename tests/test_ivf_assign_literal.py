@@ -1,9 +1,12 @@
 """The r13 literal/map-side embedding kernels must be BIT-IDENTICAL to
 the relational forms they replaced:
 
-- ivf_assign_literal vs ivf_assign (posexplode + broadcast centroid
-  join + max_by agg) — same integer MIPS dots, same ties-to-lowest-cid
-  rule;
+- ivf_assign_literal vs the reference ivf_assign (posexplode +
+  broadcast centroid join + max_by agg, tests/similarity_reference.py)
+  — same integer MIPS dots, same ties-to-lowest-cid rule;
+- _ivf_candidates vs the reference candidate pairs (argmax corpus
+  cells, rank-window probe cells), for a trained and an untrained
+  codebook;
 - the rewritten lsh_buckets_relational (zip_with literal-coefficient
   map form) vs the r12 posexplode + groupBy-sum form, reconstructed
   here verbatim as the reference implementation.
@@ -15,13 +18,18 @@ from pyspark.sql import functions as F
 
 from foxsec_pipeline_spark.operators.similarity import (
     LSH_SCALE,
-    ivf_assign,
+    _ivf_candidates,
     ivf_assign_literal,
-    ivf_codebook_df,
     ivf_train_codebook,
     lsh_buckets_relational,
 )
 from foxsec_pipeline_spark.session import load_tables
+from tests.similarity_reference import (
+    corpus_codebook,
+    ivf_assign,
+    ivf_candidates,
+    ivf_codebook_df,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -108,34 +116,35 @@ def test_lsh_buckets_map_form_matches_relational(spark):
 
 
 def test_ivf_candidates_literal_matches_relational(spark):
-    """The codebook fast path of _ivf_candidates must produce the
-    identical (query, neighbor) candidate set as the relational
-    centroid-frame path — same argmax cells, same top-nprobe probe
-    order (d DESC, cid ASC) including ties."""
-    from foxsec_pipeline_spark.operators.similarity import (
-        _ivf_candidates,
-    )
+    """_ivf_candidates must produce the identical (query, neighbor)
+    candidate set as the reference centroid-frame form — same argmax
+    cells, same top-nprobe probe order (d DESC, cid ASC) including
+    ties — for the trained codebook and for untrained corpus-id
+    centroids."""
     from foxsec_pipeline_spark.plans.catalog_data import _CENTROID_IDS
 
     emb = load_tables(spark, SF_DIR, "embeddings")["embeddings"]
-    cb = ivf_train_codebook(emb, list(_CENTROID_IDS), iters=3)
+    codebooks = {
+        "trained": ivf_train_codebook(emb, list(_CENTROID_IDS), iters=3),
+        "untrained": corpus_codebook(emb, _CENTROID_IDS),
+    }
     q = emb.where(F.col("vec_id") < 10)
-    for nprobe in (1, 2, 4):
-        rel = {
-            (r["query_id"], r["neighbor_id"])
-            for r in _ivf_candidates(
-                q, emb, None, "vec_id", "embedding", nprobe, True,
-                ivf_codebook_df(spark, cb),
-            ).collect()
-        }
-        lit = {
-            (r["query_id"], r["neighbor_id"])
-            for r in _ivf_candidates(
-                q, emb, None, "vec_id", "embedding", nprobe, True,
-                None, cb,
-            ).collect()
-        }
-        assert rel == lit, nprobe
+    for kind, cb in codebooks.items():
+        assert len(cb) == len(_CENTROID_IDS), kind
+        for nprobe in (1, 2, 4):
+            rel = {
+                (r["query_id"], r["neighbor_id"])
+                for r in ivf_candidates(
+                    q, emb, ivf_codebook_df(spark, cb), nprobe
+                ).collect()
+            }
+            lit = {
+                (r["query_id"], r["neighbor_id"])
+                for r in _ivf_candidates(
+                    q, emb, cb, "vec_id", "embedding", nprobe
+                ).collect()
+            }
+            assert rel and rel == lit, (kind, nprobe)
 
 
 def test_lsh_buckets_drops_null_and_empty_vectors(spark):
@@ -148,3 +157,42 @@ def test_lsh_buckets_drops_null_and_empty_vectors(spark):
     table = [[1.0, -1.0, 1.0, -1.0], [1.0, 1.0, -1.0, -1.0]]
     out = lsh_buckets_relational(df, [table]).collect()
     assert {r["vec_id"] for r in out} == {1}
+
+
+def test_lsh_buckets_null_component_contract(spark, monkeypatch):
+    """Vectors with any NULL component get no bucket rows, like null
+    and empty vectors: the map form and the relational form, each
+    forced through the cutoff, give identical rows at 4 planes and at
+    24 planes, and the clean vectors keep their buckets."""
+    from foxsec_pipeline_spark.operators import similarity
+    from foxsec_pipeline_spark.plans.catalog_data import (
+        _LSH_TABLES,
+        _PLANES,
+    )
+
+    emb = load_tables(spark, SF_DIR, "embeddings")["embeddings"]
+    clean = emb.where(F.col("vec_id") < 50).select("vec_id", "embedding")
+    dim = len(clean.first()["embedding"])
+    bad = spark.createDataFrame(
+        [
+            (10_001, [0.25] * (dim - 1) + [None]),
+            (10_002, [None] + [-0.5] * (dim - 1)),
+            (10_003, [None] * dim),
+            (10_004, []),
+            (10_005, None),
+        ],
+        clean.schema,
+    )
+    mixed = clean.unionByName(bad)
+
+    def rows(df, tables, max_planes):
+        monkeypatch.setattr(similarity, "_LSH_MAP_FORM_MAX_PLANES", max_planes)
+        out = lsh_buckets_relational(df, tables).collect()
+        return {(r["vec_id"], r["__tbl"], r["__bkt"]) for r in out}
+
+    for tables in ([_PLANES], _LSH_TABLES):
+        relational = rows(mixed, tables, 0)
+        map_form = rows(mixed, tables, 10**6)
+        assert relational == map_form, len(tables)
+        assert relational == rows(clean, tables, 0), len(tables)
+        assert {v for v, _, _ in relational} == set(range(50))

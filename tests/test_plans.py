@@ -202,8 +202,8 @@ def test_multiprobe_lsh_single_equijoin(spark, reg):
 
 
 def test_ivf_no_cartesian_and_broadcast_centroids(spark, reg):
-    """IVF assignment: the corpus joins BROADCAST centroid components
-    on the dimension index and probes via a cell equi-join — the
+    """IVF: corpus cells and query probe cells come map-side from the
+    literal codebook and meet in a BROADCAST cell equi-join — the
     corpus must never self-join or plan a cartesian."""
     plan = plan_of(reg["ann_cosine_ivf"].fn(spark, SF_DIR))
     assert "CartesianProduct" not in plan, plan
@@ -640,7 +640,7 @@ def test_ann_eval_query_sets_fixed_count(spark, reg):
 
 def test_range_ivf_no_cartesian(spark, reg):
     """ann_range_search_ivf: cell-probed candidates — equi-joins only
-    (broadcast centroids + cell id), never a corpus cartesian; the
+    (on the cell id), never a corpus cartesian; the
     query pick is the same TakeOrderedAndProject sample."""
     plan = plan_of(reg["ann_range_search_ivf"].fn(spark, SF_DIR))
     assert "CartesianProduct" not in plan, plan

@@ -1,15 +1,13 @@
 """The r13 literal-codebook PQ encode must be BIT-IDENTICAL to the
 relational posexplode/broadcast-join encode it replaced inside
-cosine_topk_pq — same fixed-point conversion, same squared-L2 argmin,
-same ties-to-lowest-code-id rule. The literal path exists purely as a
+cosine_topk_pq (kept as the reference in tests/similarity_reference.py)
+— same fixed-point conversion, same squared-L2 argmin, same
+ties-to-lowest-code-id rule. The literal path exists purely as a
 plan-shape optimization (one codegen projection, zero exchanges), so
 any row-level divergence is a correctness bug, not a tuning knob."""
 
-from pyspark.sql import functions as F
-
 from foxsec_pipeline_spark.operators.similarity import (
     pq_codebook_df,
-    pq_encode,
     pq_encode_literal,
     pq_train_codebooks,
 )
@@ -19,6 +17,7 @@ from foxsec_pipeline_spark.plans.catalog_data import (
     _PQ_TRAIN_ITERS,
 )
 from foxsec_pipeline_spark.session import load_tables
+from tests.similarity_reference import pq_encode
 
 SF_DIR = "/root/testdata/sf0.001"
 
