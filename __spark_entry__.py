@@ -42,9 +42,7 @@ from foxsec_pipeline_spark.plans.catalog import registry  # noqa: E402
 # Queries whose code the current change touches: they lead the order
 # whatever their latest row says. Reset this list in every change.
 _CHANGED = [
-    "winnowing_plagiarism_pairs",
-    "ann_cosine_lsh", "ann_cosine_lsh_multiprobe", "dedup_embedding_cosine",
-    "ann_cosine_ivf", "ann_range_search_ivf",
+    "split_leakage_check", "dedup_clusters", "cluster_canonical_docs",
 ]
 
 

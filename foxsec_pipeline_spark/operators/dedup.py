@@ -298,100 +298,71 @@ def dedup_clusters(
     id_col: str = "doc_id",
     a_col: str = "doc_a",
     b_col: str = "doc_b",
-    max_iterations: int = 20,
 ) -> DataFrame:
     """Resolve candidate pairs into duplicate clusters with a
     canonical keeper — the *action* step the candidate generators
     (jaccard / minhash / embedding) feed.
 
-    Connected components by min-label propagation: every node starts
-    labeled with itself; each round a node adopts the minimum label
-    among itself and its neighbors; at fixpoint label(x) = min id of
-    x's component, which doubles as the cluster keeper. Rounds are
-    whole joins (label frontier propagates like hash-to-min), so
-    convergence needs O(diameter) rounds — near-dup graphs are dense
-    clumps with tiny diameters, and `max_iterations` bounds the
-    pathological chain case. The driver-side loop tests only a
-    changed-count per round (an aggregate, not a collect of rows).
+    Connected components by union-find, one plain-Python function
+    (`stars`) applied through mapInPandas twice: on each partition of
+    the pair list it collapses the local components into stars on
+    their local minimum; then ONE task runs it over all star edges and
+    labels every touched node with the minimum id of its component,
+    which doubles as the cluster keeper. Stars keep each partition's
+    connectivity exactly, so the second pass sees the components of
+    the whole pair list. The job count is constant — no per-round
+    loop, whatever the component diameter. Pairs with a NULL endpoint
+    are dropped at the entry; a self-pair (a, a) touches a alone.
+
+    Scale contract: the final pass is one task, with memory in
+    O(touched nodes + cross-partition star edges). Near-dup pair lists
+    touch a small fraction of a corpus; a graph touching hundreds of
+    millions of nodes needs a distributed components algorithm.
 
     Returns (id_col, cluster_keeper, cluster_size) for EVERY node in
     `nodes` — singletons keep themselves, so the output is directly a
-    keep/drop decision: drop rows where id != cluster_keeper.
-
-    Loop mechanics (r12): each round's update is `persist()`ed and a
-    single probe aggregate (max of the per-row changed flag) both
-    answers the fixpoint test AND materializes that cache — one job
-    per round, where the older eager-localCheckpoint + separate probe
-    paid two sequential jobs. The logical plan does nest round over
-    round (persist does not truncate lineage, and `labels` is read
-    twice per round), but every inner reference resolves to an
-    already-populated InMemoryRelation at planning time, so
-    re-analysis stays cheap and no subtree re-executes. The FINAL
-    labels are cut with one eager `localCheckpoint` and every
-    per-round cache is then unpersisted before return, so nothing
-    stays pinned after the call (the old persist-based version leaked
-    its final cache and contaminated every later query in the bench
-    run; a leak-regression test pins this). Change detection rides
-    the update join itself (max(changed) over a flag column) instead
-    of a second old-vs-new join.
+    keep/drop decision: drop rows where id != cluster_keeper. The
+    touched-node labels are read twice (singleton anti-join, size
+    aggregate), so they are cut once with an eager `localCheckpoint`
+    (no persist: nothing stays pinned after the call).
     """
-    edges = (
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .unionByName(
-            pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # iterate ONLY over edge-touched nodes: singletons can never change
-    # label, so they skip the loop entirely and rejoin at the end with
-    # label = self. On a near-dup corpus the touched set is a small
-    # fraction of the corpus (36% on the driver testdata, far less on
-    # clean data at scale), which shrinks every per-round join/shuffle
-    # by the same factor. Edges are already bidirectional, so src alone
-    # covers both endpoints. Labels SEED at min(self, neighbors) — the
-    # first propagation round computed as one aggregate over the edge
-    # list itself (no join), so the loop starts one round ahead.
-    labels = (
-        edges.groupBy(F.col("src").alias("node"))
-        .agg(F.least(F.col("src"), F.min("dst")).alias("label"))
-        .localCheckpoint(eager=True)
-    )
-    # r12: each round runs ONE job, not two — `upd` is persist()ed and
-    # the changed-probe aggregate both answers the fixpoint test and
-    # materializes the cache in the same pass (the old eager
-    # localCheckpoint + separate agg paid two sequential jobs per
-    # round). Lineage stays shallow (each round reads the previous
-    # round's cache), and the final labels are cut to an eager
-    # checkpoint below so every per-round cache can be unpersisted
-    # before return — nothing leaks into later queries (the r10
-    # persist-leak lesson).
-    cached_rounds = []
-    for _ in range(max_iterations):
-        neighbor_min = (
-            edges.join(labels, edges["dst"] == labels["node"])
-            .groupBy("src")
-            .agg(F.min("label").alias("nlabel"))
-        )
-        upd = (
-            labels.join(neighbor_min, labels["node"] == neighbor_min["src"], "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))
-                ).alias("label"),
-                (F.col("nlabel") < F.col("label")).cast("int").alias("__chg"),
+
+    def stars(batches):
+        """Union-find over the pairs (first two columns) of one
+        partition, emitted as star edges (node, label): a component
+        merges onto the smaller root, so label = the component's
+        minimum id. Nested, so workers receive it by value."""
+        import pandas as pd
+
+        parent = {}
+
+        def find(x):
+            root = parent.setdefault(x, x)
+            while root != parent[root]:
+                parent[root] = parent[parent[root]]  # path halving
+                root = parent[root]
+            return root
+
+        for pdf in batches:
+            for a, b in zip(pdf.iloc[:, 0].tolist(), pdf.iloc[:, 1].tolist()):
+                ra, rb = find(a), find(b)
+                if ra != rb:
+                    parent[max(ra, rb)] = min(ra, rb)
+        if parent:
+            yield pd.DataFrame(
+                {"node": list(parent), "label": [find(x) for x in parent]}
             )
-            .persist()
-        )
-        cached_rounds.append(upd)
-        changed = upd.agg(F.max("__chg")).first()[0]
-        labels = upd.drop("__chg")
-        if not changed:
-            break
-    labels = labels.localCheckpoint(eager=True)
-    for c in cached_rounds:
-        c.unpersist(blocking=False)
+
+    dtype = pairs.schema[a_col].dataType.simpleString()
+    schema = f"node {dtype}, label {dtype}"
+    labels = (
+        pairs.select(a_col, b_col)
+        .dropna()
+        .mapInPandas(stars, schema)
+        .repartition(1)
+        .mapInPandas(stars, schema)
+        .localCheckpoint(eager=True)
+    )
     singletons = (
         nodes.select(F.col(id_col).alias("node"))
         .join(labels.select("node"), "node", "left_anti")

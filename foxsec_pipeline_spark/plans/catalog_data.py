@@ -221,7 +221,8 @@ FROM comp c JOIN (
     "dedup_clusters",
     _clusters_oracle(),
     doc="dedup resolution: MinHash candidate pairs -> connected "
-        "components (min-label propagation, O(diameter) join rounds) -> "
+        "components (union-find: one pass per pair partition, then one "
+        "single-task pass over the star edges) -> "
         "canonical min-id keeper per cluster; every doc gets a row, so "
         "the output IS the keep/drop decision. Oracle computes components "
         "with a recursive CTE",
@@ -2685,7 +2686,7 @@ def q_split_leakage_check(spark, sf_dir):
     docs = _docs(spark, sf_dir)
     splits = [("train", 0.9), ("val", 0.05), ("test", 0.05)]
     # the candidate list is tiny (near-dup pairs) but its lineage is
-    # the full shingle->minhash->band explode; it feeds the CC loop
+    # the full shingle->minhash->band explode; it feeds the CC pass
     # AND both split joins, so cut it once or the explode runs 3x
     # (measured 5.3 s -> ~2 s at sf0.1)
     pairs = (

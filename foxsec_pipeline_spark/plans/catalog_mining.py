@@ -961,7 +961,7 @@ FROM r{_PR_ITERS} rN JOIN deg d ON rN.node = d.node
         "constant, not data-dependent, so ranks do NOT checkpoint per "
         "round (bounded lineage; the materialization cost measured 3x "
         "at sf0.1) — unbounded variants should checkpoint "
-        "periodically like the dedup CC loop",
+        "every few rounds",
 )
 def q_copurchase_pagerank(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
@@ -1000,7 +1000,7 @@ def q_copurchase_pagerank(spark, sf_dir):
     # count the lineage is bounded and the checkpoint's per-round RDD
     # materialization dominates the plan (measured 3x at sf0.1:
     # 8.4s -> 2.8s). An unbounded-iteration variant should checkpoint
-    # every few rounds like the dedup CC loop.
+    # every few rounds.
     for _ in range(_PR_ITERS):
         contrib = ed.join(
             ranks.withColumnRenamed("node", "src"), "src"

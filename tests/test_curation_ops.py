@@ -332,11 +332,11 @@ def test_edit_distance_pairs_blocked_max_dist_1(spark):
 
 
 def test_dedup_clusters_unpersists_round_caches(spark):
-    """The CC loop persist()s each round's labels (one job per round:
-    the changed-probe aggregate doubles as cache materialization); all
-    of them must be unpersisted before return so nothing leaks into
-    later queries in a long-lived session (the r10 persist-leak
-    lesson). Only pre-existing cache entries may survive."""
+    """dedup_clusters must leave nothing persisted behind, so nothing
+    leaks into later queries in a long-lived session (the r10
+    persist-leak lesson): its labels are cut with an eager
+    localCheckpoint, never persist(). Only pre-existing cache entries
+    and its localCheckpoint RDDs may survive."""
     from foxsec_pipeline_spark.operators.dedup import dedup_clusters
 
     jsc = spark.sparkContext._jsc.sc()
@@ -355,8 +355,63 @@ def test_dedup_clusters_unpersists_round_caches(spark):
         (4, 4, 1), (7, 7, 1),
     }
     after = jsc.getPersistentRDDs().size()
-    # exactly three localCheckpoint RDDs may remain registered (edges,
-    # seed labels, final labels — reclaimed by the ContextCleaner when
-    # the python refs drop); every per-round persist() must be gone.
-    # A leaked round cache would add one entry per CC round on top.
+    # at most three localCheckpoint RDDs may remain registered
+    # (reclaimed by the ContextCleaner when the python refs drop);
+    # nothing may be persist()ed.
     assert after - before <= 3
+
+
+def _clusters(spark, pairs, nodes, partitions):
+    """dedup_clusters over ``pairs`` cut into ``partitions`` contiguous
+    slices, as {doc_id: (cluster_keeper, cluster_size)}."""
+    from foxsec_pipeline_spark.operators.dedup import dedup_clusters
+
+    rdd = spark.sparkContext.parallelize(pairs, partitions)
+    pdf = spark.createDataFrame(rdd, "doc_a long, doc_b long")
+    ndf = spark.createDataFrame([(n,) for n in nodes], "doc_id long")
+    rows = dedup_clusters(pdf, ndf, id_col="doc_id").collect()
+    assert len(rows) == len(nodes)
+    return {r.doc_id: (r.cluster_keeper, r.cluster_size) for r in rows}
+
+
+def test_dedup_clusters_long_path_over_partitions(spark):
+    """A 40-node path whose pairs are shuffled over 8 partitions
+    resolves to ONE cluster keyed on node 1: every partition sees only
+    path fragments, so the answer needs the cross-partition pass."""
+    import random
+
+    pairs = [(i, i + 1) for i in range(1, 40)]
+    random.Random(7).shuffle(pairs)
+    want = {n: (1, 40) for n in range(1, 41)} | {41: (41, 1), 42: (42, 1)}
+    assert _clusters(spark, pairs, list(want), partitions=8) == want
+
+
+def test_dedup_clusters_component_spans_partitions(spark):
+    """One pair per partition for a component whose edges all live in
+    different partitions, next to one that lives in a single one."""
+    span = [(9, 5), (5, 7), (7, 3), (3, 8)]
+    local = [(20, 21), (21, 22)]
+    want = {n: (3, 5) for n in (3, 5, 7, 8, 9)}
+    want |= {n: (20, 3) for n in (20, 21, 22)} | {30: (30, 1)}
+    got = _clusters(spark, span + local, list(want), partitions=len(span) + 1)
+    assert got == want
+
+
+@pytest.mark.parametrize(
+    "pairs, want",
+    [
+        # reversed, duplicate and self pairs: (4, 4) touches 4 alone
+        ([(2, 1), (1, 2), (1, 2), (3, 2), (4, 4), (6, 5), (5, 6)],
+         {1: (1, 3), 2: (1, 3), 3: (1, 3), 4: (4, 1), 5: (5, 2),
+          6: (5, 2), 7: (7, 1)}),
+        ([], {n: (n, 1) for n in range(1, 8)}),
+        # contract: a pair with a NULL endpoint is dropped at the entry —
+        # it emits no NULL-id row and counts toward no cluster's size
+        ([(1, None), (None, 2), (None, None), (2, 3)],
+         {1: (1, 1), 2: (2, 2), 3: (2, 2), 4: (4, 1), 5: (5, 1),
+          6: (6, 1), 7: (7, 1)}),
+    ],
+    ids=["reversed_duplicate_self", "empty", "null_endpoint"],
+)
+def test_dedup_clusters_edge_pairs(spark, pairs, want):
+    assert _clusters(spark, pairs, list(range(1, 8)), partitions=3) == want

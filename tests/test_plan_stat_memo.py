@@ -88,3 +88,30 @@ def test_density_split_memoized_profile_still_honors_args(spark):
     tight, hot2 = density_hot_split(sizes, "n", 50, 100_000)
     assert generous == 100_000 and not hot1
     assert tight < 1000 and hot2
+
+
+def test_memo_sees_parquet_input_rewritten_mid_session(spark, tmp_path):
+    """Input files changed within a session: a fresh read of a
+    rewritten parquet directory is the SAME analyzed plan (same path,
+    same schema), so a key on plan identity alone served the old
+    statistic. Both value-feeding memo users must see the new files:
+    the tfidf `n_docs` count and the BPE merge list."""
+    from foxsec_pipeline_spark.operators.textanalysis import (
+        bpe_train_merge_list,
+    )
+
+    path = str(tmp_path / "documents.parquet")
+    schema = "doc_id long, text string"
+    spark.createDataFrame(
+        [(1, "ab ab ab"), (2, "ab cd")], schema
+    ).write.parquet(path)
+    assert plan_stat_memo(spark.read.parquet(path), lambda p: p.count()) == 2
+    before = bpe_train_merge_list(spark.read.parquet(path), n_merges=1)
+    assert before[0][1:3] == ("a", "b")
+
+    spark.createDataFrame(
+        [(i, "xy xy zz") for i in range(1, 6)], schema
+    ).write.mode("overwrite").parquet(path)
+    assert plan_stat_memo(spark.read.parquet(path), lambda p: p.count()) == 5
+    after = bpe_train_merge_list(spark.read.parquet(path), n_merges=1)
+    assert after[0][1:3] == ("x", "y")
